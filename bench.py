@@ -142,7 +142,7 @@ def ensure_images(spark) -> None:
     from ionex_spark.sources.images import write_images
 
     t0 = time.time()
-    write_images(spark, N_IMAGES, IMAGES_PATH, partitions=CPUS * 2)
+    write_images(spark, N_IMAGES, IMAGES_PATH)
     print(
         f"# generated {N_IMAGES} images in {time.time() - t0:.1f}s",
         file=sys.stderr,

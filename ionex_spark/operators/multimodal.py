@@ -21,23 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
-
-
-@F.pandas_udf(DoubleType())
-def verify_psnr(data: pd.Series, fmt: pd.Series, w: pd.Series,
-                h: pd.Series, image_id: pd.Series) -> pd.Series:
-    """PSNR of the decoded payload vs the deterministic generator source
-    (inf for lossless). image_id 'img{i:012d}' carries the generator seed."""
-    from ionex_spark.core import codec, synth
-
-    out = np.empty(len(data), dtype=np.float64)
-    for k in range(len(data)):
-        i = int(image_id.iloc[k][3:])
-        dec = codec.decode_image(data.iloc[k], fmt.iloc[k])
-        src = synth.image_pixels(i, int(w.iloc[k]), int(h.iloc[k]))
-        out[k] = codec.psnr(src, dec)
-    return pd.Series(out)
+from pyspark.sql.types import BooleanType, LongType
 
 
 @F.pandas_udf(LongType())
@@ -310,18 +294,6 @@ def verify_payloads(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
             )
 
     return src.mapInArrow(fn, out_schema)
-
-
-@F.pandas_udf(BooleanType())
-def _caption_matches(image_id: pd.Series, caption: pd.Series) -> pd.Series:
-    """Strict caption equality vs the deterministic generator."""
-    from ionex_spark.core import synth
-
-    out = np.zeros(len(image_id), dtype=bool)
-    for k in range(len(image_id)):
-        i = int(image_id.iloc[k][3:])
-        out[k] = synth.caption_of(i) == caption.iloc[k]
-    return pd.Series(out)
 
 
 def phash_near_dup_pairs(

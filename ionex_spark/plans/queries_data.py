@@ -132,15 +132,14 @@ FROM r GROUP BY src
 """
 
 
-# priority 10: min-label CC variant; dedup_groups_star (the O(log n)
-# 100 TB default) stays gated and shares this oracle
 @register("dedup_groups", oracle=_DUCK_GROUPS_SQL, priority=100)  # r7: plan restructured (see NEW_THIS_ROUND)
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup GROUP assignment — the step after pair detection a real
     pipeline needs: connected components over the verified near-dup pair
-    graph (iterative min-label propagation), every doc labeled with its
-    canonical representative (min reachable id).  Oracle: DuckDB
-    recursive-CTE transitive closure."""
+    graph (dedup.connected_components: one-task union-find under the edge
+    threshold, large-star/small-star contraction above it), every doc
+    labeled with its canonical representative (min reachable id).
+    Oracle: DuckDB recursive-CTE transitive closure."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     # the pair pipeline IS dedup_minhash_pairs — one definition, so the
     # Spark side can never drift from the shared _DUCK_PAIRS_SQL oracle
@@ -152,23 +151,13 @@ def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shares dedup_groups' recursive-CTE oracle: any divergence between the
-# two CC algorithms fails the gate
 @register("dedup_groups_star", oracle=_DUCK_GROUPS_SQL, priority=100)  # r7: plan restructured
 def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_groups through the O(log n) LARGE-STAR/SMALL-STAR contraction
-    (dedup.connected_components_star) instead of min-label propagation —
-    the adversarial-graph escalation (deep duplicate chains): same
-    groups, logarithmic rounds.  Shares dedup_groups' recursive-CTE
-    oracle, so any divergence between the two CC algorithms fails the
-    gate."""
-    docs = read_split(spark, f"{sf_dir}/documents.parquet")
-    pairs = dedup_minhash_pairs(spark, sf_dir)
-    groups = dd.connected_components_star(docs.select("doc_id"), pairs)
-    return groups.selectExpr(
-        "doc_id", "group_id",
-        "CASE WHEN doc_id = group_id THEN 1 ELSE 0 END as is_keeper",
-    )
+    """dedup_groups under its historical star-contraction name: the same
+    plan (dedup.connected_components is the one CC solver), kept
+    registered with dedup_groups' recursive-CTE oracle so both names
+    stay gated."""
+    return dedup_groups(spark, sf_dir)
 
 
 def _duck_simhash_sig() -> str:
@@ -1423,8 +1412,8 @@ def snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_dedup_groups",
     # priority 10 = past the 50-entry window (composition of two already-
-    # gated pipelines: embedding_near_dups pairs + the star-contraction
-    # CC exercised by dedup_groups_star); still check_oracle-verifiable.
+    # gated pipelines: embedding_near_dups pairs + the CC solver
+    # exercised by dedup_groups); still check_oracle-verifiable.
     priority=10,
     oracle=f"""
 WITH RECURSIVE pairs AS ({{EMB_PAIRS}}),
@@ -1443,16 +1432,16 @@ FROM r GROUP BY src
 """.replace("{EMB_PAIRS}", _DUCK_EMB_PAIRS),
 )
 def embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMBEDDING dedup GROUPS: connected components (large-star/small-
-    star) over the verified embedding-cosine near-dup pair graph — the
-    step that turns pairwise semantic duplicates into keep/drop
-    decisions, completing the embedding dedup pipeline the same way
-    dedup_groups completes the minhash one.  Pairs come from the SAME
+    """EMBEDDING dedup GROUPS: connected components over the verified
+    embedding-cosine near-dup pair graph — the step that turns pairwise
+    semantic duplicates into keep/drop decisions, completing the
+    embedding dedup pipeline the same way dedup_groups completes the
+    minhash one.  Pairs come from the SAME
     registered embedding_near_dups plan, so this row also cross-checks
     that query against the recursive-CTE transitive closure."""
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
     pairs = embedding_near_dups(spark, sf_dir)
-    groups = dd.connected_components_star(
+    groups = dd.connected_components(
         emb.selectExpr("vec_id as doc_id"), pairs
     )
     return groups.selectExpr(
@@ -2476,17 +2465,11 @@ def dedup_group_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     id) instead of the arbitrary min-id.  The argmax is the packed-
     bigint trick (one map-side-combining shuffle, no window sort —
     dedup.group_representatives); the oracle recomputes the transitive
-    closure AND the packed argmax in SQL.
-
-    Round 7: components come from the SCALE-ADAPTIVE star variant (the
-    codebase's documented 100 TB default — local union-find in one task
-    under the edge threshold, O(log n) star contraction above) instead
-    of iterative min-label propagation: identical groups (component
-    minima — the two algorithms share dedup_groups' oracle), a fraction
-    of the job rounds (guide §1.2: fix the distributed algorithm first)."""
+    closure AND the packed argmax in SQL.  Components come from
+    dedup.connected_components, the same solver as dedup_groups."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     pairs = dedup_minhash_pairs(spark, sf_dir)
-    members = dd.connected_components_star(docs.select("doc_id"), pairs)
+    members = dd.connected_components(docs.select("doc_id"), pairs)
     scored = docs.selectExpr(
         "doc_id",
         f"cast(floor({tx.quality_score_sql('text')}"
@@ -2824,12 +2807,9 @@ def contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate of an eval doc — the contamination a doc-level
     random split commits whenever dup pairs exist
     (dedup.contamination_safe_split; property test proves zero minhash
-    pairs cross splits).
-
-    Round 7: components via the scale-adaptive star variant (see
-    dedup_group_representatives — identical groups, shared-oracle-
-    proven, far fewer rounds than min-label propagation)."""
+    pairs cross splits).  Components come from
+    dedup.connected_components, the same solver as dedup_groups."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     pairs = dedup_minhash_pairs(spark, sf_dir)
-    members = dd.connected_components_star(docs.select("doc_id"), pairs)
+    members = dd.connected_components(docs.select("doc_id"), pairs)
     return dd.contamination_safe_split(members)

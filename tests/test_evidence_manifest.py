@@ -183,17 +183,18 @@ EVIDENCE: dict[str, list[str]] = {
     ],
     "dedup_groups": [
         f"{T}/test_spark_ops.py::test_connected_components_chain_and_convergence_guard",
+        f"{T}/test_spark_ops.py::test_connected_components_deep_chain_and_parity",
     ],
     "dedup_groups_star": [
-        f"{T}/test_spark_ops.py::test_connected_components_star_deep_chain_and_parity",
+        f"{T}/test_spark_ops.py::test_connected_components_deep_chain_and_parity",
     ],
     "embedding_near_dups": [
         f"{T}/test_spark_ops.py::test_phash_near_dup_pairs",
         f"{T}/test_spark_ops.py::test_planes_for_bounds_candidate_count",
     ],
     "embedding_dedup_groups": [
-        "oracle",  # recursive-CTE CC vs star contraction: different algorithms
-        f"{T}/test_spark_ops.py::test_connected_components_star_deep_chain_and_parity",
+        "oracle",  # recursive-CTE CC vs union-find: different algorithms
+        f"{T}/test_spark_ops.py::test_connected_components_deep_chain_and_parity",
     ],
     "dedup_containment_pairs": [
         f"{T}/test_spark_ops.py::test_containment_asymmetric_planted",

@@ -317,24 +317,33 @@ def test_knn_fallback_metrics_pathological_sparse(spark):
         assert got[got["qid"] == qid]["cid"].tolist() == want, qid
 
 
+# local_threshold=0 forces the DISTRIBUTED star rounds; the default
+# solves in one union-find task — every CC test runs both paths
+CC_PATHS = (0, 5_000_000)
+
+
 def test_connected_components_chain_and_convergence_guard(spark):
-    """A 30-doc chain is one group (label = min id) when max_iter covers
-    the diameter, and raises instead of silently splitting when not."""
+    """A 30-doc chain is one group (label = min id), and the distributed
+    rounds raise instead of silently splitting when max_iter is too
+    small for the chain."""
     nodes = spark.range(32).selectExpr("id as doc_id")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "id_a bigint, id_b bigint"
     )
-    got = dd.connected_components(nodes, chain, max_iter=30).toPandas()
-    labels = dict(zip(got["doc_id"], got["group_id"]))
-    assert all(labels[i] == 0 for i in range(30))
-    assert labels[30] == 30 and labels[31] == 31  # isolated docs
+    for thr in CC_PATHS:
+        got = dd.connected_components(
+            nodes, chain, max_iter=30, local_threshold=thr
+        ).toPandas()
+        labels = dict(zip(got["doc_id"], got["group_id"]))
+        assert all(labels[i] == 0 for i in range(30)), thr
+        assert labels[30] == 30 and labels[31] == 31, thr  # isolated docs
     with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(nodes, chain, max_iter=3)
+        dd.connected_components(nodes, chain, max_iter=1, local_threshold=0)
 
 
 def test_connected_components_string_ids(spark):
-    """Non-numeric ids use the join-based convergence check (the sum
-    shortcut would NULL-poison on a string cast and stop after one hop)."""
+    """String ids are orderable like any other: the component minimum is
+    the lexicographically smallest id, on both paths."""
     nodes = spark.createDataFrame(
         [(f"doc-{i:02d}",) for i in range(6)], "doc_id string"
     )
@@ -342,12 +351,15 @@ def test_connected_components_string_ids(spark):
         [(f"doc-{i:02d}", f"doc-{i + 1:02d}") for i in range(4)],
         "id_a string, id_b string",
     )
-    got = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(nodes, chain, max_iter=10).collect()
-    )
-    assert all(got[f"doc-{i:02d}"] == "doc-00" for i in range(5))
-    assert got["doc-05"] == "doc-05"
+    for thr in CC_PATHS:
+        got = dict(
+            (r.doc_id, r.group_id)
+            for r in dd.connected_components(
+                nodes, chain, max_iter=10, local_threshold=thr
+            ).collect()
+        )
+        assert all(got[f"doc-{i:02d}"] == "doc-00" for i in range(5)), thr
+        assert got["doc-05"] == "doc-05", thr
 
 
 def test_whitespace_class_tokenization_parity(spark):
@@ -402,21 +414,22 @@ def test_whitespace_class_tokenization_parity(spark):
 
 
 def test_connected_components_fractional_ids(spark):
-    """Fractional double ids must use the exact join-based convergence
-    check: the decimal(38,0)-cast sum shortcut loses the fraction, so a
-    round that changes 5.4 -> 5.3 while another changes 5.3 -> 5.2 can
-    leave the rounded sum unchanged — early convergence, split groups."""
+    """Fractional double ids keep their fraction: a chain 9.0-5.4-5.3-5.2
+    is one group labeled 5.2, on both paths."""
     nodes = spark.createDataFrame(
         [(9.0,), (5.4,), (5.3,), (5.2,)], "doc_id double"
     )
     chain = spark.createDataFrame(
         [(9.0, 5.4), (5.4, 5.3), (5.3, 5.2)], "id_a double, id_b double"
     )
-    got = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(nodes, chain, max_iter=10).collect()
-    )
-    assert all(v == 5.2 for v in got.values()), got
+    for thr in CC_PATHS:
+        got = dict(
+            (r.doc_id, r.group_id)
+            for r in dd.connected_components(
+                nodes, chain, max_iter=10, local_threshold=thr
+            ).collect()
+        )
+        assert all(v == 5.2 for v in got.values()), (thr, got)
 
 
 def test_ivf_assign_empty_centroids(spark):
@@ -428,22 +441,20 @@ def test_ivf_assign_empty_centroids(spark):
     assert sim.ivf_assign(emb, empty_cent).count() == 0
 
 
-def test_connected_components_star_deep_chain_and_parity(spark):
-    """Star contraction converges in O(log n) rounds on a 500-deep chain
-    (min-label propagation would need 500 rounds) and agrees with the
-    label-propagation variant on a random graph with isolated nodes."""
+def test_connected_components_deep_chain_and_parity(spark):
+    """Star contraction converges in O(log n) rounds on a 500-deep chain,
+    and both paths agree with a plain union-find on a seeded random
+    graph with isolated nodes."""
     import random
 
     nodes = spark.range(520).selectExpr("id as doc_id")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(499)], "id_a bigint, id_b bigint"
     )
-    # local_threshold=0 forces the DISTRIBUTED star rounds; the default
-    # takes the single-task union-find shortcut — both must agree
-    for thr in (0, 5_000_000):
+    for thr in CC_PATHS:
         got = dict(
             (r.doc_id, r.group_id)
-            for r in dd.connected_components_star(
+            for r in dd.connected_components(
                 nodes, chain, max_iter=20, local_threshold=thr
             ).collect()
         )
@@ -451,28 +462,29 @@ def test_connected_components_star_deep_chain_and_parity(spark):
         assert all(got[i] == i for i in range(500, 520)), thr  # isolated
 
     rng = random.Random(5)
-    rand_pairs = spark.createDataFrame(
-        [
-            tuple(sorted(rng.sample(range(200), 2)))
-            for _ in range(150)
-        ],
-        "id_a bigint, id_b bigint",
-    )
+    edges = [tuple(sorted(rng.sample(range(200), 2))) for _ in range(150)]
+    parent = list(range(200))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # union by minimum: root = min id
+    want = {i: find(i) for i in range(200)}
+    rand_pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     small_nodes = spark.range(200).selectExpr("id as doc_id")
-    prop = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(
-            small_nodes, rand_pairs, max_iter=50
-        ).collect()
-    )
-    for thr in (0, 5_000_000):
-        star = dict(
+    for thr in CC_PATHS:
+        got = dict(
             (r.doc_id, r.group_id)
-            for r in dd.connected_components_star(
+            for r in dd.connected_components(
                 small_nodes, rand_pairs, max_iter=20, local_threshold=thr
             ).collect()
         )
-        assert star == prop, thr
+        assert got == want, thr
 
 
 def test_lsh_multiprobe_beats_single_bucket(spark):
@@ -1339,6 +1351,26 @@ def test_containment_doc_freq_cap_never_false_positive(spark):
     assert (1, 2) in capped  # the true duplicate pair survives the cap
     for k, (n_sh, c_ab) in capped.items():
         assert n_sh <= exact[k][0] and c_ab <= exact[k][1]
+
+
+def test_write_images_keeps_explicit_partitions(spark, tmp_path, monkeypatch):
+    """The audit-shard floor applies only when ``partitions`` is None:
+    an explicit file count is kept even above the row threshold."""
+    import glob
+
+    from ionex_spark.sources import images
+
+    # 3 shards -> the floor engages from 3000 rows (300 shards / 300k rows
+    # at the real granularity)
+    monkeypatch.setattr(images, "_AUDIT_GRANULARITY", 1.0)
+
+    def n_files(path):
+        return len(glob.glob(f"{path}/part-*.parquet"))
+
+    images.write_images(spark, 3000, str(tmp_path / "explicit"), partitions=2)
+    assert n_files(tmp_path / "explicit") == 2
+    images.write_images(spark, 3000, str(tmp_path / "default"))
+    assert n_files(tmp_path / "default") == 3
 
 
 def test_audit_sample_files_deterministic_subset(spark, tmp_path):
